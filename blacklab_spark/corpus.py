@@ -308,13 +308,19 @@ class Corpus:
         return [desensitize_py(t) for t in re.findall(pat, text)]
 
     def topk(self, query: str, k: int = 10, filter_expr: str | None = None) -> DataFrame:
-        """Top-k BM25 over the postings (segment-parallel kernel).
+        """Top-k BM25 over the postings (segment-parallel kernel; a
+        batch of one over the batch_topk path).
 
-        For display-sized k (≤ bm25.DRIVER_HYDRATE_MAX_K) the result is
-        hydrated eagerly — the returned DataFrame wraps k local rows and
-        the search has already run. Larger k returns a lazy distributed
-        plan (broadcast-join hydration) that preserves
-        pushdown/projection for callers that filter before collecting."""
+        Returns (doc_id, score, conv_id, turn_idx, role, tool, text)
+        ordered by (score desc, doc_id asc). For display-sized k (≤
+        bm25.DRIVER_HYDRATE_MAX_K) the search has already run when this
+        returns: three Spark jobs (shuffle-map, score + merge, hydration
+        scan; a filter or tombstone side adds its own shuffle-map job),
+        and the DataFrame is a local relation over the k rows, so
+        collecting it runs no further job. An empty result has the same
+        schema. Larger k returns a lazy distributed plan
+        (broadcast-join hydration) that preserves pushdown/projection
+        for callers that filter before collecting."""
         from blacklab_spark.search.bm25 import topk_bm25
 
         return topk_bm25(self, query, k=k, filter_expr=filter_expr)

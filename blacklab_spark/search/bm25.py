@@ -14,12 +14,35 @@ reference search/BlackLabIndexAbstract.java:496,619). Our execution:
    with block-max skipping — terms in desc max-contribution order, θ =
    running k-th best, blocks skipped when their stored max impact
    cannot reach/tie θ or when their [min_doc,max_doc] range holds no
-   remaining candidate — then a per-segment exact top-k,
+   remaining candidate — then a per-segment exact top-k. A single
+   query is a batch of one: topk_bm25 and batch_topk share this one
+   per-segment path. Each segment's task takes at most one
+   (segment_id, doc_id) side, cogrouped in: the allow list of a
+   metadata filter, or the deny list of tombstones,
 4. global top-k merge: orderBy(desc(score), doc_id).limit(k) over the
-   tiny union of per-segment candidates (TakeOrderedAndProject).
+   tiny union of per-segment candidates (TakeOrderedAndProject);
+   batch_topk takes a per-query window instead,
+5. hydration: for display-sized k the driver fetches the k docs'
+   metadata in one pruned scan and hands the rows back as a local,
+   Arrow-built relation, so collecting the result runs no Spark job.
+   Larger k stays a lazy broadcast-join plan.
 
 Scale: step 3's input shuffle moves only the query terms' postings
-(KBs..MBs, not the index); step 4 moves ≤ k rows per segment.
+(KBs..MBs, not the index); step 4 moves ≤ k rows per segment. A
+display-sized topk runs three Spark jobs — the shuffle-map stage that
+feeds the per-segment kernel, the score + merge stage the driver
+collects, and the hydration scan — and no job to return its rows. A
+cogrouped side (filter or tombstones) adds the shuffle-map job that
+feeds it.
+
+Floor: each Python-worker task of the score stage pays 0.17–0.25 s
+(measured on a 4-core box, CPython 3.11) before it scores anything.
+pyspark's per-task setup_spark_files calls importlib.invalidate_caches(),
+which re-reads the directories of pyspark.zip and the spark-core jar on
+the workers' PYTHONPATH. Patching that method in the Python worker cut
+a trivial one-task job from ~280 ms to ~110 ms, but the hook needs
+spark.python.worker.module, and the worker daemon only loads modules
+whose names start with ``pyspark``, so it is not done here.
 
 score(q,d) = Σ_t idf(t) · tf/(tf + k1·(1−b+b·dl/avgdl)),
 idf = ln(1 + (N − df + 0.5)/(df + 0.5)), ties broken by ascending
@@ -28,9 +51,11 @@ doc_id — the exact-arithmetic oracle contract (SURVEY.md §2.5).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from blacklab_spark.index import codec
 
@@ -38,6 +63,9 @@ from blacklab_spark.index import codec
 # instead of materializing k full-text rows on the driver — maxretrieve-
 # scale requests must not shift O(k·doc_text) onto the driver
 DRIVER_HYDRATE_MAX_K = 1024
+
+_SCORED = "query_id int, doc_id long, score double"
+_HYDRATED = ("doc_id", "conv_id", "turn_idx", "role", "tool", "text")
 
 
 def _maxscore_query(
@@ -72,10 +100,10 @@ def _maxscore_query(
 
     ``blocks_by_term`` maps term -> (block rows, max block_max_wtf_raw);
     ``decode_block(term, block_idx, row) -> (local_doc_ids, w_base)``
-    returns idf-independent weights (batch memoizes it so shared blocks
-    decode once across queries). Tombstoned docs (``seg_dead_arr``,
-    local ids) are zeroed as we go so they never contribute to θ
-    (they'd cause over-pruning of live candidates)."""
+    returns idf-independent weights (memoized per segment, so blocks
+    shared by the queries of a batch decode once). Tombstoned docs
+    (``seg_dead_arr``, local ids) are zeroed as we go so they never
+    contribute to θ (they'd cause over-pruning of live candidates)."""
     items = []
     for t, qidf in qidf_map.items():
         got = blocks_by_term.get(t)
@@ -153,6 +181,137 @@ def _seg_partitioned(corpus, posts: DataFrame) -> DataFrame:
     return posts.repartition(min(n_segments, 8 * par), "segment_id")
 
 
+def _query_idfs(corpus, queries: list[str]) -> list[dict[str, float]]:
+    """Per query {term: idf weight} over the terms the index holds.
+    Repeated query terms accumulate idf weight, like Lucene's
+    BooleanQuery with duplicate clauses; idf comes from LIVE stats
+    (appends/compactions change N and df — stored per-block maxima are
+    idf-independent for this reason)."""
+    counts = [Counter(corpus.tokenize_query(q)) for q in queries]
+    terms = sorted({t for c in counts for t in c})
+    tinfo = corpus.term_stats(terms) if terms else {}
+    n_docs = corpus.meta["n_docs"]
+    return [
+        {t: qtf * float(np.log(1.0 + (n_docs - tinfo[t] + 0.5) / (tinfo[t] + 0.5)))
+         for t, qtf in c.items() if t in tinfo}
+        for c in counts
+    ]
+
+
+def _segment_side(corpus, filter_expr: str | None):
+    """The one optional per-segment (segment_id, doc_id) side, and
+    whether it is an allow list.
+
+    A metadata filter is an allow list: a DISTRIBUTED per-segment doc
+    set (reference SpanQueryFiltered builds an acceptedDocs bitset per
+    segment, SpansFiltered.java:17-60 — never a driver-global set).
+    doc_stats already excludes tombstoned docs, so a filtered query
+    needs no deny list. Otherwise the tombstones (liveDocs analogue)
+    are a deny list, applied before per-segment top-k selection so
+    tombstoned docs can't crowd out live candidates. Either way the
+    side cogroups straight into its segment's scoring task and never
+    visits the driver, so there is no size cliff and no broadcast."""
+    if filter_expr:
+        return corpus.doc_stats.filter(filter_expr).select("segment_id", "doc_id"), True
+    dels = corpus.deletes
+    if dels is None:
+        return None, False
+    seg_size = corpus.meta["segment_size"]
+    return dels.select(
+        F.expr(f"doc_id DIV {seg_size}").alias("segment_id"), "doc_id"
+    ), False
+
+
+def _no_scores() -> pd.DataFrame:
+    return pd.DataFrame({"query_id": pd.Series([], dtype=np.int32),
+                         "doc_id": pd.Series([], dtype=np.int64),
+                         "score": pd.Series([], dtype=np.float64)})
+
+
+def _segment_topk(corpus, idf_by_query: list[dict[str, float]], k: int,
+                  filter_expr: str | None = None) -> DataFrame:
+    """Per-segment top-k candidates (query_id, doc_id, score) of every
+    query: one postings scan over the union of the queries' terms, one
+    scoring task per segment, with the segment's side (_segment_side)
+    cogrouped in when there is one.
+
+    Each task runs the SAME MaxScore/block-max kernel (_maxscore_query)
+    per query over shared block state: blocks are decoded lazily and
+    memoized, so a block several queries need decodes ONCE, and a block
+    no query's θ bound ever reaches is never decoded at all. One dense
+    seg_size accumulator is shared by all queries and reset
+    candidate-proportionally (scores[nz] = 0) between queries — no
+    per-query memset."""
+    meta = corpus.meta
+    k1, b_, avgdl = meta["k1"], meta["b"], meta["avgdl"]
+    seg_size = meta["segment_size"]
+    terms = sorted({t for m in idf_by_query for t in m})
+    posts = corpus.postings.filter(F.col("term").isin(terms)).select(
+        "segment_id", "term", "min_doc", "max_doc",
+        "doc_ids", "freqs", "dls", "block_max_wtf_raw",
+    )
+    b_q = corpus.spark.sparkContext.broadcast(idf_by_query)
+    side, allow = _segment_side(corpus, filter_expr)
+
+    def score_segment(pdf: pd.DataFrame, side_pdf=None) -> pd.DataFrame:
+        if len(pdf) == 0 or (allow and len(side_pdf) == 0):
+            return _no_scores()
+        base = int(pdf["segment_id"].iloc[0]) * seg_size
+        side_ids = None if side_pdf is None else side_pdf["doc_id"].to_numpy(np.int64)
+        allow_arr = side_ids if allow else None
+        dead = (
+            np.asarray([], dtype=np.int64)
+            if allow or side_ids is None
+            else side_ids[(side_ids >= base) & (side_ids < base + seg_size)] - base
+        )
+        blocks_by_term = {
+            term: (rows := list(grp.itertuples(index=False)),
+                   max(r.block_max_wtf_raw for r in rows))
+            for term, grp in pdf.groupby("term")
+        }
+        decoded: dict[tuple, tuple] = {}
+
+        def decode_block(t, bi, r):
+            got = decoded.get((t, bi))
+            if got is None:
+                dids = codec.decode_doc_ids(r.doc_ids)
+                tf = codec.decode_freqs(r.freqs)
+                dl = codec.decode_freqs(r.dls)
+                got = (dids - base,
+                       tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl)))
+                decoded[(t, bi)] = got
+            return got
+
+        scores = np.zeros(seg_size, dtype=np.float64)
+        out_q, out_d, out_s = [], [], []
+        for qid, idf_map in enumerate(b_q.value):
+            _maxscore_query(scores, blocks_by_term, idf_map, k, base,
+                            seg_size, allow_arr, dead, decode_block)
+            sel = _topk_select(scores, k)
+            if sel.size:
+                out_q.append(np.full(sel.size, qid, dtype=np.int32))
+                out_d.append((sel + base).astype(np.int64))
+                out_s.append(scores[sel].copy())
+            scores[np.flatnonzero(scores)] = 0.0
+        if not out_q:
+            return _no_scores()
+        return pd.DataFrame({"query_id": np.concatenate(out_q),
+                             "doc_id": np.concatenate(out_d),
+                             "score": np.concatenate(out_s)})
+
+    if side is None:
+        # single-arg wrapper: applyInPandas treats a two-arg function
+        # as (key, pdf)
+        return _seg_partitioned(corpus, posts).groupBy("segment_id").applyInPandas(
+            lambda pdf: score_segment(pdf), schema=_SCORED
+        )
+    return (
+        posts.groupBy("segment_id")
+        .cogroup(side.groupBy("segment_id"))
+        .applyInPandas(score_segment, schema=_SCORED)
+    )
+
+
 def topk_bm25(
     corpus,
     query: str,
@@ -162,209 +321,54 @@ def topk_bm25(
     """Returns DataFrame (doc_id, score, conv_id, turn_idx, role, tool,
     text) — top-k by (score desc, doc_id asc)."""
     spark = corpus.spark
-    meta = corpus.meta
-    qterms = corpus.tokenize_query(query)
-    out_schema = "doc_id long, score double"
-
-    def empty():
-        # no-match results carry the SAME hydrated schema as hits
-        hyd = corpus.tokenized.select(
-            "doc_id", "conv_id", "turn_idx", "role", "tool", "text"
-        )
-        sch = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-            + [f for f in hyd.schema.fields if f.name != "doc_id"]
-        )
-        return spark.createDataFrame([], sch)
-
-    if not qterms:
-        return empty()
-
-    tinfo = corpus.term_stats(qterms)
-    if not tinfo:
-        return empty()
-    n_docs = meta["n_docs"]
-    # repeated query terms accumulate idf weight, like Lucene's
-    # BooleanQuery with duplicate clauses; idf comes from LIVE stats
-    # (appends/compactions change N and df — stored per-block maxima
-    # are idf-independent for this reason)
-    from collections import Counter
-
-    qcount = Counter(qterms)
-    idf_by_term = {
-        t: qcount[t]
-        * float(np.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5)))
-        for t, df_ in tinfo.items()
-    }
-
-    posts = corpus.postings.filter(
-        F.col("term").isin(list(idf_by_term))
-    ).select(
-        "segment_id", "term", "min_doc", "max_doc",
-        "doc_ids", "freqs", "dls", "block_max_wtf_raw",
+    hyd_src = corpus.tokenized.select(*_HYDRATED)
+    # no-match results carry the SAME hydrated schema as hits
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()),
+         T.StructField("score", T.DoubleType())]
+        + [f for f in hyd_src.schema.fields if f.name != "doc_id"]
     )
-
-    allowed_df = None
-    if filter_expr:
-        # metadata filter -> DISTRIBUTED per-segment doc set (reference
-        # SpanQueryFiltered builds an acceptedDocs bitset per segment,
-        # SpansFiltered.java:17-60 — never a driver-global set). The
-        # cogroup below ships each segment's allowed doc_ids straight
-        # into that segment's scoring task; the filter never visits the
-        # driver, so there is no size cliff. doc_stats already excludes
-        # tombstoned docs, so deletes need no separate handling here.
-        allowed_df = corpus.doc_stats.filter(filter_expr).select(
-            "segment_id", "doc_id"
-        )
-
-    # tombstones (liveDocs analogue): excluded before per-segment top-k
-    # selection so tombstoned docs can't crowd out live candidates.
-    # DISTRIBUTED: each segment's tombstones cogroup into that segment's
-    # scoring task (same pattern as the metadata filter) — the delete
-    # set never visits the driver, so a large tombstone table cannot
-    # bloat a broadcast. When a metadata filter is present, doc_stats
-    # already excludes tombstoned docs, so deletes need no handling.
-    dels = corpus.deletes
-    dead_df = None
-    if dels is not None and allowed_df is None:
-        dead_df = dels.select(
-            F.expr(f"doc_id DIV {meta['segment_size']}").alias("segment_id"),
-            "doc_id",
-        )
-
-    k1, b_ = meta["k1"], meta["b"]
-    avgdl = meta["avgdl"]
-    seg_size = meta["segment_size"]
-    b_idf = spark.sparkContext.broadcast(idf_by_term)
-
-    def _score_segment(pdf: pd.DataFrame, allow_arr, dead_arr=None) -> pd.DataFrame:
-        idf = b_idf.value
-        seg = int(pdf["segment_id"].iloc[0])
-        base = seg * seg_size
-        scores = np.zeros(seg_size, dtype=np.float64)
-        blocks_by_term = {
-            term: (rows := list(grp.itertuples(index=False)),
-                   max(r.block_max_wtf_raw for r in rows))
-            for term, grp in pdf.groupby("term")
-        }
-        seg_dead_arr = (
-            np.asarray([], dtype=np.int64)
-            if dead_arr is None
-            else (dead_arr[(dead_arr >= base) & (dead_arr < base + seg_size)] - base)
-        )
-
-        def decode_block(t, bi, r):
-            dids = codec.decode_doc_ids(r.doc_ids)
-            tf = codec.decode_freqs(r.freqs)
-            dl = codec.decode_freqs(r.dls)
-            return dids - base, tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl))
-
-        _maxscore_query(scores, blocks_by_term, idf, k, base, seg_size,
-                        allow_arr, seg_dead_arr, decode_block)
-        sel = _topk_select(scores, k)
-        if sel.size == 0:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({"doc_id": (sel + base).astype(np.int64),
-                             "score": scores[sel]})
-
-    if allowed_df is not None:
-        _empty = pd.DataFrame(
-            {"doc_id": pd.Series([], dtype=np.int64),
-             "score": pd.Series([], dtype=np.float64)}
-        )
-
-        def score_cogrouped(posts_pdf: pd.DataFrame,
-                            allowed_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(posts_pdf) == 0 or len(allowed_pdf) == 0:
-                return _empty
-            allow = allowed_pdf["doc_id"].to_numpy(np.int64)
-            return _score_segment(posts_pdf, allow)
-
-        per_seg = (
-            posts.groupBy("segment_id")
-            .cogroup(allowed_df.groupBy("segment_id"))
-            .applyInPandas(score_cogrouped, schema=out_schema)
-        )
-    elif dead_df is not None:
-
-        def score_with_dead(posts_pdf: pd.DataFrame,
-                            dead_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(posts_pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype=np.int64),
-                     "score": pd.Series([], dtype=np.float64)}
-                )
-            dead_arr = dead_pdf["doc_id"].to_numpy(np.int64)
-            return _score_segment(posts_pdf, None, dead_arr)
-
-        per_seg = (
-            posts.groupBy("segment_id")
-            .cogroup(dead_df.groupBy("segment_id"))
-            .applyInPandas(score_with_dead, schema=out_schema)
-        )
-    else:
-        # single-arg wrapper: applyInPandas treats a two-arg function
-        # as (key, pdf)
-        def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_segment(pdf, None)
-
-        per_seg = _seg_partitioned(corpus, posts).groupBy(
-            "segment_id"
-        ).applyInPandas(score_segment, schema=out_schema)
-    # global top-k merge (TakeOrderedAndProject over <=k rows/segment),
-    # then hydrate metadata for just those k docs: the isin filter is
-    # pushed into the tokenized parquet scan (row-group pruning), so
-    # hydration never joins against the full corpus. For display-sized k
-    # the k-row join of scores to metadata happens ON THE DRIVER (the
-    # score rows are already collected for the isin list): one small
-    # scan job instead of a broadcast-join+sort plan — per-query latency
-    # is floor-bound by Spark job count, and display decoration of k
-    # rows is O(k).
-    hyd_src = corpus.tokenized.select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "text"
+    (idf,) = _query_idfs(corpus, [query])
+    if not idf:
+        return spark.createDataFrame([], schema)
+    top = (
+        _segment_topk(corpus, [idf], k, filter_expr)
+        .select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
     if k > DRIVER_HYDRATE_MAX_K:
         # maxretrieve-scale k: stay lazy and distributed — broadcast the
         # ≤k score rows into the tokenized scan so no full-text row ever
         # lands on the driver, and callers keep pushdown/projection on
         # the returned plan
-        top = per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        meta_cols = [f.name for f in hyd_src.schema.fields
-                     if f.name != "doc_id"]
         return (
             hyd_src.join(F.broadcast(top), "doc_id")
-            .select("doc_id", "score", *meta_cols)
+            .select(*schema.names)
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
-    top_rows = per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    full_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-        + [f for f in hyd_src.schema.fields if f.name != "doc_id"]
-    )
+    # display-sized k: the driver holds the ≤k merged rows, so the k-row
+    # join to metadata happens here — the isin filter is pushed into the
+    # tokenized parquet scan (row-group pruning), one small scan job
+    # instead of a broadcast-join+sort plan. The rows go back as an
+    # Arrow-built local relation: collecting it runs no Spark job.
+    top_rows = top.collect()
     if not top_rows:
-        return spark.createDataFrame([], full_schema)
-    ids = [int(r["doc_id"]) for r in top_rows]
+        return spark.createDataFrame([], schema)
     by_id = {
         r["doc_id"]: r
-        for r in hyd_src.filter(F.col("doc_id").isin(ids)).collect()
+        for r in hyd_src.filter(
+            F.col("doc_id").isin([r["doc_id"] for r in top_rows])
+        ).collect()
     }
-    meta_cols = [f.name for f in full_schema.fields[2:]]
+    meta_cols = schema.names[2:]
     rows = [
-        tuple(
-            [int(r["doc_id"]), float(r["score"])]
-            + [by_id[r["doc_id"]][c] if r["doc_id"] in by_id else None
-               for c in meta_cols]
-        )
+        [r["doc_id"], r["score"]]
+        + [by_id[r["doc_id"]][c] if r["doc_id"] in by_id else None
+           for c in meta_cols]
         for r in top_rows
     ]
-    return spark.createDataFrame(rows, full_schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def topk_bm25_phrase(corpus, phrase: str, k: int = 10) -> DataFrame:
@@ -422,140 +426,10 @@ def batch_topk(corpus, queries: list[str], k: int = 10) -> "DataFrame":
     Returns (query_id, doc_id, score) with k rows per query, ordered
     (score desc, doc_id asc) within each query.
     """
-    from pyspark.sql import Window
-
-    spark = corpus.spark
-    meta = corpus.meta
-    n_docs = meta["n_docs"]
-    out_schema = "query_id int, doc_id long, score double"
-
-    from collections import Counter
-
-    qterm_counts = [Counter(corpus.tokenize_query(q)) for q in queries]
-    all_terms = sorted({t for qc in qterm_counts for t in qc})
-    if not all_terms:
-        return spark.createDataFrame([], out_schema)
-    tinfo = corpus.term_stats(all_terms)
-    # per-query {term: weighted idf}
-    idf_by_query: list[dict[str, float]] = []
-    for qc in qterm_counts:
-        m = {}
-        for t, qtf in qc.items():
-            if t in tinfo:
-                df_ = tinfo[t]
-                m[t] = qtf * float(
-                    np.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
-                )
-        idf_by_query.append(m)
-    live_terms = sorted({t for m in idf_by_query for t in m})
-    if not live_terms:
-        return spark.createDataFrame([], out_schema)
-
-    posts = corpus.postings.filter(F.col("term").isin(live_terms)).select(
-        "segment_id", "term", "min_doc", "max_doc",
-        "doc_ids", "freqs", "dls", "block_max_wtf_raw",
-    )
-    k1, b_, avgdl = meta["k1"], meta["b"], meta["avgdl"]
-    seg_size = meta["segment_size"]
-    # tombstones cogroup per segment (no driver collect / broadcast)
-    dels = corpus.deletes
-    dead_df = (
-        dels.select(
-            F.expr(f"doc_id DIV {seg_size}").alias("segment_id"), "doc_id"
-        )
-        if dels is not None
-        else None
-    )
-    b_q = spark.sparkContext.broadcast(idf_by_query)
-
-    def score_segment(pdf: pd.DataFrame, dead_arr=None) -> pd.DataFrame:
-        """Batch scorer = the SAME MaxScore/block-max kernel as the
-        single-query path (_maxscore_query), run per query over shared
-        block state: blocks are decoded lazily and memoized, so a block
-        several queries need decodes ONCE, and a block no query's θ
-        bound ever reaches is never decoded at all. The former batch
-        kernel decoded every block of every query term — fine for small
-        batches, but a head-term-heavy batch at 100x decodes whole
-        head-term posting lists; the θ/candidate-range skips prune them.
-        One dense seg_size accumulator is shared by all queries and
-        reset candidate-proportionally (scores[nz] = 0) between queries
-        — no per-query memset."""
-        seg = int(pdf["segment_id"].iloc[0])
-        base = seg * seg_size
-        blocks_by_term = {
-            term: (rows := list(grp.itertuples(index=False)),
-                   max(r.block_max_wtf_raw for r in rows))
-            for term, grp in pdf.groupby("term")
-        }
-        seg_dead_arr = (
-            np.asarray([], dtype=np.int64)
-            if dead_arr is None
-            else (dead_arr[(dead_arr >= base) & (dead_arr < base + seg_size)] - base)
-        )
-        decoded: dict[tuple, tuple] = {}
-
-        def decode_block(t, bi, r):
-            got = decoded.get((t, bi))
-            if got is None:
-                dids = codec.decode_doc_ids(r.doc_ids)
-                tf = codec.decode_freqs(r.freqs)
-                dl = codec.decode_freqs(r.dls)
-                got = (dids - base,
-                       tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl)))
-                decoded[(t, bi)] = got
-            return got
-
-        scores = np.zeros(seg_size, dtype=np.float64)
-        out_q, out_d, out_s = [], [], []
-        for qid, idf_map in enumerate(b_q.value):
-            _maxscore_query(scores, blocks_by_term, idf_map, k, base,
-                            seg_size, None, seg_dead_arr, decode_block)
-            sel = _topk_select(scores, k)
-            if sel.size:
-                out_q.append(np.full(sel.size, qid, dtype=np.int32))
-                out_d.append((sel + base).astype(np.int64))
-                out_s.append(scores[sel].copy())
-            nz = np.flatnonzero(scores)
-            if nz.size:
-                scores[nz] = 0.0
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype=np.int32),
-                 "doc_id": pd.Series([], dtype=np.int64),
-                 "score": pd.Series([], dtype=np.float64)}
-            )
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q),
-             "doc_id": np.concatenate(out_d),
-             "score": np.concatenate(out_s)}
-        )
-
-    if dead_df is not None:
-        _empty_b = pd.DataFrame(
-            {"query_id": pd.Series([], dtype=np.int32),
-             "doc_id": pd.Series([], dtype=np.int64),
-             "score": pd.Series([], dtype=np.float64)}
-        )
-
-        def score_with_dead(posts_pdf: pd.DataFrame,
-                            dead_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(posts_pdf) == 0:
-                return _empty_b
-            return score_segment(
-                posts_pdf, dead_pdf["doc_id"].to_numpy(np.int64)
-            )
-
-        per_seg = (
-            posts.groupBy("segment_id")
-            .cogroup(dead_df.groupBy("segment_id"))
-            .applyInPandas(score_with_dead, schema=out_schema)
-        )
-    else:
-        # single-arg wrapper: applyInPandas treats a two-arg function
-        # as (key, pdf)
-        per_seg = _seg_partitioned(corpus, posts).groupBy(
-            "segment_id"
-        ).applyInPandas(lambda pdf: score_segment(pdf), schema=out_schema)
+    idf_by_query = _query_idfs(corpus, queries)
+    if not any(idf_by_query):
+        return corpus.spark.createDataFrame([], _SCORED)
+    per_seg = _segment_topk(corpus, idf_by_query, k)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_seg.withColumn("_rn", F.row_number().over(w))

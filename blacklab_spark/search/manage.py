@@ -82,7 +82,9 @@ FORMAT_INFO: dict[str, tuple[str, str]] = {
                    "The reference's own test corpus format."),
 }
 
-_NAME_RE = re.compile(r"^[\w.:@-]+$")
+# a corpus name becomes a directory name under user_dir: dot-only names
+# ("." / "..") would name user_dir itself or its parent
+_NAME_RE = re.compile(r"^(?!\.+$)[\w.:@-]+$")
 
 
 def formats_response(user_formats: dict | None = None,
@@ -385,7 +387,8 @@ class IndexManager:
                         pass  # corrupt user format: skip, don't crash serve
         for d in sorted(os.listdir(self.user_dir)):
             desc_path = os.path.join(self.user_dir, d, "corpus.json")
-            if not os.path.exists(desc_path):
+            if (not os.path.exists(desc_path)
+                    or not self._in_user_dir(os.path.join(self.user_dir, d))):
                 continue
             desc = json.load(open(desc_path))
             name = desc["name"]
@@ -398,6 +401,15 @@ class IndexManager:
 
     def _dirname(self, name: str) -> str:
         return os.path.join(self.user_dir, name.replace(":", "__"))
+
+    def _in_user_dir(self, path: str) -> bool:
+        """Is ``path``, symlinks resolved, a corpus directory directly
+        under user_dir (and not the user-formats directory)? Checked
+        where a directory enters user_corpora (create, _reload), so
+        add_docs and delete only ever write to or remove such a dir."""
+        real = os.path.realpath(path)
+        return (os.path.dirname(real) == os.path.realpath(self.user_dir)
+                and os.path.basename(real) != "_formats")
 
     # ---- access control ---------------------------------------------------
     def _owner(self, name: str) -> str | None:
@@ -462,6 +474,11 @@ class IndexManager:
                 "FORMAT_NOT_FOUND", f"Unknown input format '{fmt}'."
             )
         d = self._dirname(name)
+        if not self._in_user_dir(d):
+            return 400, error_response(
+                "ILLEGAL_INDEX_NAME",
+                "You didn't specify a valid name parameter.",
+            )
         os.makedirs(d, exist_ok=True)
         desc = {"name": name, "format": fmt,
                 "display": q.get("display") or name}

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from blacklab_spark.oracle import OracleIndex
+from blacklab_spark.search import bm25
 
 
 @pytest.fixture(scope="module")
@@ -194,6 +195,14 @@ def test_phrase_scored_topk(small_corpus, oracle):
     assert corpus.topk_phrase("zzz qqq", k=5).count() == 0
 
 
+def _jobs_run(sc, fn):
+    """(fn's result, number of Spark jobs fn ran)."""
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
 def test_topk_job_count_floor(small_corpus):
     """Single-query latency is floor-bound by Spark job count: the
     scoring kernel runs 1-2 jobs (AQE) + ONE hydration scan; the k-row
@@ -203,8 +212,14 @@ def test_topk_job_count_floor(small_corpus):
     corpus, _ = small_corpus
     sc = corpus.spark.sparkContext
     corpus.topk("word00001 word00002", k=5).collect()  # warm
-    tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    corpus.topk("word00003 word00007", k=5).collect()
-    n_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
-    assert n_jobs <= 5, f"topk ran {n_jobs} Spark jobs (display join crept back?)"
+    _, n_jobs = _jobs_run(sc, corpus.topk("word00003 word00007", k=5).collect)
+    assert n_jobs <= 3, f"topk ran {n_jobs} Spark jobs (display join crept back?)"
+    # the display-sized result is a local relation: collecting it runs
+    # no job, with or without a metadata filter (a silent Arrow
+    # fallback in createDataFrame would bring the job back)
+    for filt in (None, "role = 'assistant'"):
+        for k in (5, bm25.DRIVER_HYDRATE_MAX_K):
+            df = corpus.topk("word00003 word00007", k=k, filter_expr=filt)
+            rows, n_jobs = _jobs_run(sc, df.collect)
+            assert rows and n_jobs == 0, (filt, k, n_jobs)
+

@@ -172,6 +172,45 @@ def test_bad_corpus_name(mgd):
     assert body["error"]["code"] == "ILLEGAL_INDEX_NAME"
 
 
+def test_corpus_name_cannot_leave_user_dir(mgd, spark, tmp_path):
+    """Dot-only and slash names are rejected, and a corpus directory
+    that resolves outside user_dir (a symlink) is neither created,
+    registered on reload, written nor removed: nothing outside user_dir
+    is touched."""
+    import os
+
+    from blacklab_spark.search.manage import IndexManager
+
+    parent = os.path.dirname(mgd.user_dir)
+    outside = tmp_path / "outside"
+    outside.mkdir()
+    (outside / "keep.txt").write_text("x")
+    os.symlink(outside, os.path.join(mgd.user_dir, "escape"))
+    before = sorted(os.listdir(parent))
+    try:
+        for name in (".", "..", "...", "a/../b", "_formats", "escape"):
+            status, body = mgd("POST", "/", f"name={name}&format=txt".encode(),
+                               "application/x-www-form-urlencoded")
+            assert status == 400, name
+            assert body["error"]["code"] == "ILLEGAL_INDEX_NAME", name
+        assert sorted(os.listdir(outside)) == ["keep.txt"]
+        # a corpus.json behind the symlink: a fresh manager must not
+        # register it, so add_docs/delete cannot reach the outside dir
+        (outside / "corpus.json").write_text(
+            json.dumps({"name": "escape", "format": "txt"}))
+        mgr = IndexManager(spark, mgd.user_dir, {})
+        assert "escape" not in mgr.user_corpora
+        status, _ = mgr.add_docs("escape", [])
+        assert status == 403
+        status, _ = mgr.delete("escape")
+        assert status == 403
+    finally:
+        os.unlink(os.path.join(mgd.user_dir, "escape"))
+    assert sorted(os.listdir(parent)) == before
+    assert not os.path.exists(os.path.join(parent, "corpus.json"))
+    assert sorted(os.listdir(outside)) == ["corpus.json", "keep.txt"]
+
+
 def test_private_corpus_enforcement(mgd):
     """Corpora created with a userid are private: owner-only management,
     owner-or-shared read (reference User.java / Index.userMayRead /
